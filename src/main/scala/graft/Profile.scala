@@ -16,7 +16,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * the driver contract; it changes no query result.
   */
 object Profile {
-  private final class Agg extends SparkListener {
+  private[graft] final class Agg extends SparkListener {
     // per-callsite job histogram: which ACTIONS a harness runs and how
     // often — the finding of guide §1 profiling was that ingest-harness
     // wall time is (job count) × (fixed per-job cost), so the fix target
@@ -99,7 +99,7 @@ object Profile {
       }
     }
     def json(name: String, wallSec: Double): String =
-      s"""{"query":"$name","wall_sec":${f"$wallSec%.3f"},"jobs":${jobs.get},""" +
+      s"""{"query":${Jsons.quote(name)},"wall_sec":${f"$wallSec%.3f"},"jobs":${jobs.get},""" +
         s""""stages":${stages.get},"tasks":${tasks.get},""" +
         s""""task_time_sec":${f"${taskTimeMs.get / 1e3}%.3f"},""" +
         s""""gc_sec":${f"${gcMs.get / 1e3}%.3f"},""" +
@@ -109,6 +109,18 @@ object Profile {
         s""""shuffle_write_mb":${f"${shufWriteB.get / 1e6}%.2f"},""" +
         s""""input_mb":${f"${inputB.get / 1e6}%.2f"}}"""
   }
+
+  /** One `GRAFT_PROFILE_CALLSITES` line per action callsite. */
+  private[graft] def callsiteJson(callsite: String, nJobs: Int): String =
+    s"""{"callsite":${Jsons.quote(callsite)},"n_jobs":$nJobs}"""
+
+  /** One `GRAFT_PROFILE_CALLSITES` line per "SQL description / stage
+    * name" pair; both carry user text (SQL literals, paths), hence quoted. */
+  private[graft] def stageJson(stage: String, nTasks: Int, taskMs: Long,
+                               maxTaskMs: Long): String =
+    s"""{"stage":${Jsons.quote(stage)},"n_tasks":$nTasks,""" +
+      s""""task_sec":${f"${taskMs / 1e3}%.2f"},""" +
+      s""""max_task_sec":${f"${maxTaskMs / 1e3}%.2f"}}"""
 
   def main(args: Array[String]): Unit = {
     val cfg = GraftConfig.fromEnv()
@@ -165,16 +177,13 @@ object Profile {
             import scala.jdk.CollectionConverters._
             agg.byCallsite.asScala.toSeq
               .sortBy { case (_, n) => -n.get }
-              .foreach { case (cs, n) =>
-                println(s"""{"callsite":"$cs","n_jobs":${n.get}}""") }
+              .foreach { case (cs, n) => println(callsiteJson(cs, n.get)) }
             agg.byStageName.asScala.toSeq
               .sortBy { case (_, (_, ms)) => -ms.get }
               .take(20)
               .foreach { case (sn, (nt, ms)) =>
                 val mx = Option(agg.maxTask.get(sn)).map(_.get).getOrElse(0L)
-                println(s"""{"stage":"$sn","n_tasks":${nt.get},""" +
-                  s""""task_sec":${f"${ms.get / 1e3}%.2f"},""" +
-                  s""""max_task_sec":${f"${mx / 1e3}%.2f"}}""") }
+                println(stageJson(sn, nt.get, ms.get, mx)) }
           }
           for (dir <- explainDir; d <- df) {
             Files.createDirectories(Paths.get(dir))

@@ -231,7 +231,9 @@ object Audit {
     * active in both halves would double-count — but per-(day, user)
     * counts are, and both report columns derive from them exactly
     * (n_events = Σc, n_users = row count). State size = days ×
-    * active-users-per-day, type-bounded like the vocab family. */
+    * active-users-per-day, type-bounded like the vocab family. Row
+    * duplicates across landed files count twice — precisely what the
+    * HIGH detector exists to flag when they happen at day scale. */
   def anomalyIngest(spark: SparkSession, path: String, batch: DataFrame,
                     tsCol: Column, userCol: Column, batchId: String): Boolean = {
     import graft.sinks.LedgeredState
@@ -297,14 +299,14 @@ object Audit {
   def q197AnomalyIngestSql: String = q107DayAnomalySql
 
   /** q198: the q197 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingAnomaly]] — foreachBatch per landed
+    * ([[graft.streaming.StreamIngest]] — foreachBatch per landed
     * file, Trigger.AvailableNow; the two parity files are each
     * day-straddling, so the stream exercises the same adversarial
     * grain). Oracle IS q107's — the anomaly family's triple closes. */
   def q198StreamAnomaly(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.{EventStreams, StreamIngest}
     import graft.sinks.LedgeredState
     val base = java.nio.file.Files.createTempDirectory("graft_q198_")
     val conf = spark.sparkContext.hadoopConfiguration
@@ -321,10 +323,12 @@ object Audit {
           val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
           fs.rename(part, new Path(s"$srcDir/half_$i.parquet"))
         }
-      val q = graft.streaming.StreamingAnomaly.start(spark, srcDir, statePath,
-        s"$base/ckpt", trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamIngest.drain(t => StreamIngest.start(
+          StreamIngest.files(spark, EventStreams.eventSchema, srcDir),
+          s"$base/ckpt", "stream_anomaly", t) { b =>
+        Seq("applied" -> anomalyIngest(spark, statePath, b.rows,
+          col("ts"), col("user_id"), b.key))
+      })
       anomaliesFromState(LedgeredState.readPart(spark, statePath, "day_user").get)
         .localCheckpoint(true) // materialize before the state dir dies
     } finally {
@@ -626,14 +630,15 @@ object Audit {
   def q162HistIngestSql: String = q161HistQuantilesSql
 
   /** q163: the q162 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingHist]] — foreachBatch per landed day
+    * ([[graft.streaming.StreamIngest]] — foreachBatch per landed day
     * file, Trigger.AvailableNow; disjoint day files, the additive-state
     * input contract) — q87's pattern for the distribution ledger.
     * Oracle IS q161's. */
   def q163StreamHist(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import graft.streaming.StreamIngest
     val base = java.nio.file.Files.createTempDirectory("graft_q163_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -651,10 +656,13 @@ object Audit {
           val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
           fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
         }
-      val q = graft.streaming.StreamingHist.start(spark, srcDir, statePath,
-        s"$base/ckpt", trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamIngest.drain(t => StreamIngest.start(
+          StreamIngest.files(spark, StructType(Seq(StructField("doc_id", LongType),
+            StructField("lang", StringType), StructField("qe4", LongType))), srcDir),
+          s"$base/ckpt", "stream_hist", t) { b =>
+        Seq("applied" -> histIngest(spark, statePath, b.rows, "lang", col("qe4"),
+          b.key))
+      })
       histQuantiles(graft.sinks.LedgeredState.readPart(spark, statePath, "counts").get, QuantPs)
         .withColumnRenamed("stratum", "lang")
         .orderBy(col("lang"), col("p_e4"))
@@ -972,14 +980,14 @@ object Audit {
   def q189ContractsIngestSql: String = q186ContractsSql
 
   /** q190: the q189 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingContracts]] — foreachBatch per landed
+    * ([[graft.streaming.StreamIngest]] — foreachBatch per landed
     * day file, Trigger.AvailableNow; disjoint day files, the
     * additive-state input contract) — q163's harness for the release
     * contract. Oracle IS q186's. */
   def q190StreamContracts(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.StreamIngest
     import graft.sinks.LedgeredState
     val base = java.nio.file.Files.createTempDirectory("graft_q190_")
     val conf = spark.sparkContext.hadoopConfiguration
@@ -996,11 +1004,13 @@ object Audit {
           val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
           fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
         }
-      val q = graft.streaming.StreamingContracts.start(spark, srcDir,
-        statePath, s"$base/ckpt", docContractRules(spark, dir),
-        trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      val rules = docContractRules(spark, dir)
+      StreamIngest.drain(t => StreamIngest.start(
+          StreamIngest.files(spark, StreamIngest.docSchema, srcDir),
+          s"$base/ckpt", "stream_contracts", t) { b =>
+        Seq("applied" -> contractIngest(spark, statePath, b.rows, b.key,
+          "doc_id", rules))
+      })
       contractReportFromState(
         LedgeredState.readPart(spark, statePath, "agg_rules"),
         LedgeredState.readPart(spark, statePath, "key_counts"))

@@ -283,7 +283,7 @@ object CorpusReport {
   }
 
   /** q87: the report ledger driven by a REAL file stream
-    * ([[graft.streaming.StreamingReport]], one micro-batch per landed
+    * ([[graft.streaming.StreamIngest]], one micro-batch per landed
     * day file, Trigger.AvailableNow) — q85's state fold behind
     * Structured Streaming's delivery. The harness lands two disjoint
     * day files (additive state's input contract: no upstream row
@@ -292,7 +292,7 @@ object CorpusReport {
     * equal one batch aggregation of the whole corpus — q85's oracle. */
   def q87StreamReport(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
-    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.StreamIngest
     val base = java.nio.file.Files.createTempDirectory("graft_q87_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(base.toString).getFileSystem(conf)
@@ -310,10 +310,12 @@ object CorpusReport {
             new org.apache.hadoop.fs.Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
           fs.rename(part, new org.apache.hadoop.fs.Path(s"$srcDir/day_$i.parquet"))
         }
-      val q = graft.streaming.StreamingReport.start(spark, srcDir, statePath,
-        s"$base/ckpt", Seq("lang", "source"), trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamIngest.drain(t => StreamIngest.start(
+          StreamIngest.files(spark, StreamIngest.docSchema, srcDir),
+          s"$base/ckpt", "stream_report", t) { b =>
+        Seq("applied" -> reportIngest(spark, statePath, b.rows, b.key, "text",
+          Seq("lang", "source")))
+      })
       graft.sinks.LedgeredState.readPart(spark, statePath, "report").get
         .select(col("lang"), col("source"), col("n_docs"), col("total_tokens"),
           col("min_tokens"), col("max_tokens"),

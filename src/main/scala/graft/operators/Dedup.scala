@@ -205,7 +205,8 @@ object Dedup {
     *    df drift because ANY pigeonhole-sized gram subset is sound;
     *  - `pairs` (inner_id, outer_id, containment): the accumulated
     *    relation — the operator's OUTPUT as state, so a replayed batch
-    *    is a true no-op (pairs commit with the ledger).
+    *    is a true no-op (pairs commit with the ledger). A doc_id landed
+    *    again in a LATER batch is not: it would double its postings.
     *
     * Per batch: within-batch pairs run the exact prefix-filter join
     * ([[containmentPairs]]'s internals on the batch projection); cross

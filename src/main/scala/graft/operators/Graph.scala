@@ -219,7 +219,7 @@ object Graph {
   def q137GraphIngestSql: String = q133PageRankSql
 
   /** q139: the q137 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingGraph]] — foreachBatch per landed day
+    * ([[graft.streaming.StreamIngest]] — foreachBatch per landed day
     * file, Trigger.AvailableNow), with day 2's file RE-DELIVERING a
     * slice of day 1 that the per-user watermark must drop (the q122
     * harness shape). Ranks from the streamed edge snapshot; oracle IS
@@ -227,7 +227,7 @@ object Graph {
   def q139StreamGraph(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.{EventStreams, StreamIngest}
     val base = java.nio.file.Files.createTempDirectory("graft_q139_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -248,10 +248,11 @@ object Graph {
         val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
         fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
       }
-      val q = graft.streaming.StreamingGraph.start(spark, srcDir, statePath,
-        s"$base/ckpt", trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamIngest.drain(t => StreamIngest.start(
+          StreamIngest.files(spark, EventStreams.eventSchema, srcDir),
+          s"$base/ckpt", "stream_graph", t) { b =>
+        Seq("applied" -> graphIngest(spark, statePath, b.rows, b.key))
+      })
       pageRank(graft.sinks.LedgeredState.readPart(spark, statePath, "edges").get, PrRounds)
         .orderBy(col("pr_micro").desc, col("page"))
         .localCheckpoint(true) // materialize before the state dir dies

@@ -1260,7 +1260,7 @@ object MergeQueries {
   }
 
   /** q129: the q127 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingEntity]] — foreachBatch per landed day
+    * ([[graft.streaming.StreamIngest]] — foreachBatch per landed day
     * file, Trigger.AvailableNow), with day 2's file RE-DELIVERING a
     * slice of day 1 (the q122 harness shape). Ledger-free AND
     * order-free: the registry's anti-join absorbs replays, and the
@@ -1269,7 +1269,8 @@ object MergeQueries {
   def q129StreamEntity(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import graft.streaming.StreamIngest
     val base = java.nio.file.Files.createTempDirectory("graft_q129_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -1289,10 +1290,13 @@ object MergeQueries {
         val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
         fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
       }
-      val q = graft.streaming.StreamingEntity.start(spark, srcDir, registry,
-        s"$base/ckpt", trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamIngest.drain(t => StreamIngest.start(
+          StreamIngest.files(spark, StructType(Seq(StructField("id", LongType),
+            StructField("name", StringType))), srcDir),
+          s"$base/ckpt", "stream_entity", t) { b =>
+        entityIngest(spark, registry, b.rows, "id", "name")
+        Nil
+      })
       spark.read.parquet(registry)
         .select(col("key_id"), col("name"), col("entity_id"))
         .orderBy(col("key_id"))
@@ -1583,7 +1587,9 @@ object MergeQueries {
     * head ≤ cursor, or this head's batch already in the ledger (a
     * replayed notification). Idempotent under at-least-once, unordered
     * delivery — the CATALOG is the authority for what is pending, the
-    * notification only wakes the consumer. */
+    * notification only wakes the consumer: a stale or replayed marker
+    * finds nothing past the cursor, and a marker that arrives ahead of a
+    * lost sibling still advances through every pending version. */
   def feedConsumerIngest(spark: SparkSession, catalogPath: String,
                          statePath: String, key: String,
                          valCols: Seq[String]): Boolean = {
@@ -1617,7 +1623,7 @@ object MergeQueries {
   /** q172: the change-feed consumer STREAMED — the catalog family's
     * taxonomy closes (q166 batch lifecycle → q171 incremental replay →
     * this): three versions commit with a NOTIFICATION marker landed per
-    * commit, [[graft.streaming.StreamingFeed]] drives
+    * commit, [[graft.streaming.StreamIngest]] drives
     * [[feedConsumerIngest]] one marker per micro-batch (bootstrap from
     * v1, then drift-sized feed replays to v2, v3), and the final
     * derived snapshot must equal v3 ROW-FOR-ROW with the cursor at 3 —
@@ -1628,7 +1634,8 @@ object MergeQueries {
   def q172StreamFeed(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import graft.streaming.StreamIngest
     import graft.sinks.{LedgeredState, VersionCatalog}
     val base = java.nio.file.Files.createTempDirectory("graft_q172_")
     val conf = spark.sparkContext.hadoopConfiguration
@@ -1664,11 +1671,16 @@ object MergeQueries {
               col("n_chars").as("c"))))
       land(3L, "v3")
       land(3L, "v3_replayed") // at-least-once: must no-op via the ledger
-      val q = graft.streaming.StreamingFeed.start(spark, notify, cat,
-        statePath, s"$base/ckpt", "doc_id", Seq("lang", "c"),
-        trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamIngest.drain(t => StreamIngest.start(
+          StreamIngest.files(spark,
+            StructType(Seq(StructField("version", LongType))), notify),
+          s"$base/ckpt", "stream_feed", t) { b =>
+        // the marker's content is only a wake-up; the catalog is the
+        // authority for what is pending
+        b.rows.count()
+        Seq("advanced" -> feedConsumerIngest(spark, cat, statePath, "doc_id",
+          Seq("lang", "c")))
+      })
       val snap = LedgeredState.readPart(spark, statePath, "snapshot").get
       val cursor = LedgeredState.readPart(spark, statePath, "cursor")
         .get.head().getLong(0)
@@ -2366,7 +2378,7 @@ object MergeQueries {
 
   /** q220: EXACTLY-ONCE STREAMING MERGE — the doc_id-parity halves land
     * as files, a REAL stream
-    * ([[graft.streaming.StreamingMergeManifested]], foreachBatch per
+    * ([[graft.streaming.StreamIngest]], foreachBatch per
     * file, Trigger.AvailableNow) merges each micro-batch under its
     * (pipeline, batchId) txn token, then BOTH batches are replayed
     * through the same token path (the restart scenario foreachBatch's
@@ -2377,7 +2389,7 @@ object MergeQueries {
     * re-upsert after a purge would; the commit count pins the rest). */
   def q220ExactlyOnceMerge(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
-      import org.apache.spark.sql.streaming.Trigger
+      import graft.streaming.StreamIngest
       import graft.sinks.{CommitLog, ManifestMergeSink}
       val base = java.nio.file.Files.createTempDirectory("graft_q220_")
       val conf = spark.sparkContext.hadoopConfiguration
@@ -2396,12 +2408,13 @@ object MergeQueries {
             new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
           fs.rename(part, new Path(s"$srcDir/half_$i.parquet"))
         }
-        val q = graft.streaming.StreamingMergeManifested.start(spark,
-          srcDir, target, s"$base/ckpt", docs.schema, "doc_id", Seq("len"),
-          nBuckets = 16, pipelineId = "p1",
-          trigger = Some(Trigger.AvailableNow()))
-        try q.awaitTermination()
-        finally { if (q.isActive) q.stop() }
+        StreamIngest.drain(t => StreamIngest.start(
+            StreamIngest.files(spark, docs.schema, srcDir),
+            s"$base/ckpt", "stream_merge", t) { b =>
+          val st = ManifestMergeSink.mergeIntoManifested(spark, target, b.rows,
+            "doc_id", Seq("len"), 16, txn = Some(("p1", b.id)))
+          Seq("n_matched" -> st.nMatched, "n_upserted" -> st.nUpserted)
+        })
         val committed = CommitLog.seqs(fs, new Path(target)).size
         // the restart replay: both batch tokens re-applied directly —
         // each must no-op without writing a byte or a commit
@@ -2838,9 +2851,8 @@ object MergeQueries {
     * + both protocol counts. */
   def q224StreamCdcApply(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
-      import org.apache.spark.sql.streaming.Trigger
       import graft.sinks.{CommitLog, ManifestMergeSink}
-      import graft.streaming.StreamingCdcApply
+      import graft.streaming.{StreamIngest, StreamingCdcApply}
       val base = java.nio.file.Files.createTempDirectory("graft_q224_")
       val fs = new Path(base.toString)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -2853,13 +2865,10 @@ object MergeQueries {
         ManifestMergeSink.mergeIntoManifested(spark, src,
           docs.filter(col("doc_id") <= cut), "doc_id", Seq("len"), 16,
           updatesUnique = true)
-        def sync(ckpt: String): Unit = {
-          val q = StreamingCdcApply.start(spark, src, rep, ckpt,
-            "doc_id", Seq("len"), nBuckets = 16, pipelineId = "cdc1",
-            trigger = Some(Trigger.AvailableNow()))
-          try q.awaitTermination()
-          finally { if (q.isActive) q.stop() }
-        }
+        def sync(ckpt: String): Unit =
+          StreamIngest.drain(t => StreamingCdcApply.start(spark, src, rep,
+            ckpt, "doc_id", Seq("len"), nBuckets = 16, pipelineId = "cdc1",
+            trigger = t))
         sync(s"$base/ckpt") // bootstrap off commit 1
         // the source takes an update wave and a purge wave...
         ManifestMergeSink.mergeIntoManifested(spark, src,

@@ -227,7 +227,7 @@ object Overlap {
     "TRUE AS union_ok", "TRUE AS matches_batch,\n  TRUE AS union_ok")
 
   /** q160: the q159 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingSketch]] — foreachBatch per landed day
+    * ([[graft.streaming.StreamIngest]] — foreachBatch per landed day
     * file, Trigger.AvailableNow), files landed in reversed day order
     * with a re-delivered slice — both absorbed by the monotone merge
     * (the q142/q151 streamed-monotone-state pattern). Oracle IS
@@ -235,7 +235,8 @@ object Overlap {
   def q160StreamSketch(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import graft.streaming.StreamIngest
     val base = java.nio.file.Files.createTempDirectory("graft_q160_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -256,10 +257,13 @@ object Overlap {
           val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
           fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
         }
-      val q = graft.streaming.StreamingSketch.start(spark, srcDir, statePath,
-        s"$base/ckpt", "key", K, trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamIngest.drain(t => StreamIngest.start(
+          StreamIngest.files(spark, StructType(Seq(StructField("key", StringType),
+            StructField("doc_id", LongType))), srcDir),
+          s"$base/ckpt", "stream_sketch", t) { b =>
+        sketchIngest(spark, statePath, b.rows, "key", K)
+        Nil
+      })
       ingestedGateRow(spark, dir, statePath)
     } finally {
       fs.delete(new Path(base.toString), true)

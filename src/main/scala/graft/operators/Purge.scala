@@ -190,7 +190,7 @@ object Purge {
        |ORDER BY sect, version, doc_id""".stripMargin
 
   /** q178: the purge QUEUE streamed — deletion requests land as marker
-    * files (each a parquet of doc_ids), [[graft.streaming.StreamingPurge]]
+    * files (each a parquet of doc_ids), [[graft.streaming.StreamIngest]]
     * drives [[MergeSink.purgePartitioned]] one request per micro-batch,
     * and a REPLAYED duplicate of the first request is landed in-gate:
     * purge idempotence (absent keys rewrite identical content) is the
@@ -200,7 +200,8 @@ object Purge {
   def q178StreamPurge(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
       import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
+      import org.apache.spark.sql.types.{LongType, StructField, StructType}
+      import graft.streaming.StreamIngest
       val base = java.nio.file.Files.createTempDirectory("graft_q178_")
       val conf = spark.sparkContext.hadoopConfiguration
       val fs = new Path(base.toString).getFileSystem(conf)
@@ -225,11 +226,14 @@ object Purge {
           .select(col("doc_id")), "b")
         land(docs.filter(col("doc_id") % PurgeMod === 0L)
           .select(col("doc_id")), "a_replayed") // idempotence exercised
-        val q = graft.streaming.StreamingPurge.start(spark, queue, snap,
-          s"$base/ckpt", "doc_id", NBuckets,
-          trigger = Some(Trigger.AvailableNow()))
-        try q.awaitTermination()
-        finally { if (q.isActive) q.stop() }
+        StreamIngest.drain(t => StreamIngest.start(
+            StreamIngest.files(spark,
+              StructType(Seq(StructField("doc_id", LongType))), queue),
+            s"$base/ckpt", "stream_purge", t) { b =>
+          val st = MergeSink.purgePartitioned(spark, snap, b.rows, "doc_id",
+            NBuckets)
+          Seq("purged" -> st.nPurged, "buckets" -> st.nBucketsTouched)
+        })
         MergeSink.readPartitioned(spark, snap)
           .select(col("doc_id"), col("lang"), col("n_chars").as("c"))
           .orderBy(col("doc_id"))

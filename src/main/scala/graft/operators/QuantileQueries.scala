@@ -337,12 +337,12 @@ object QuantileQueries {
   def q211KllByTypeIngestSql: String = q210KllByTypeSql
 
   /** q212: the q211 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingKllByGroup]] — foreachBatch per landed
+    * ([[graft.streaming.StreamIngest]] — foreachBatch per landed
     * parity file, Trigger.AvailableNow). Oracle IS q210's — the
     * per-stratum continuous-quantile triple closes. */
   def q212StreamKllByType(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
-      import org.apache.spark.sql.streaming.Trigger
+      import graft.streaming.{EventStreams, StreamIngest}
       val base = java.nio.file.Files.createTempDirectory("graft_q212_")
       val conf = spark.sparkContext.hadoopConfiguration
       val fs = new Path(base.toString).getFileSystem(conf)
@@ -359,11 +359,12 @@ object QuantileQueries {
               new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
             fs.rename(part, new Path(s"$srcDir/half_$i.parquet"))
           }
-        val q = graft.streaming.StreamingKllByGroup.start(spark, srcDir,
-          statePath, s"$base/ckpt", groupCol = "event_type",
-          valueCol = "value", trigger = Some(Trigger.AvailableNow()))
-        try q.awaitTermination()
-        finally { if (q.isActive) q.stop() }
+        StreamIngest.drain(t => StreamIngest.start(
+            StreamIngest.files(spark, EventStreams.eventSchema, srcDir),
+            s"$base/ckpt", "stream_kll_by_group", t) { b =>
+          Seq("applied" -> kllIngestByGroup(spark, statePath, b.rows,
+            "event_type", "value", b.key))
+        })
         kllBandReportByGroup(ev, "event_type", "value",
             kllByGroupFromState(spark, statePath))
           .localCheckpoint(true) // materialize before the state dir dies
@@ -373,12 +374,12 @@ object QuantileQueries {
   def q212StreamKllByTypeSql: String = q210KllByTypeSql
 
   /** q207: the q206 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingKll]] — foreachBatch per landed
+    * ([[graft.streaming.StreamIngest]] — foreachBatch per landed
     * parity file, Trigger.AvailableNow). Oracle IS q205's — the
     * continuous-quantile triple closes. */
   def q207StreamKll(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
-      import org.apache.spark.sql.streaming.Trigger
+      import graft.streaming.{EventStreams, StreamIngest}
       val base = java.nio.file.Files.createTempDirectory("graft_q207_")
       val conf = spark.sparkContext.hadoopConfiguration
       val fs = new Path(base.toString).getFileSystem(conf)
@@ -395,11 +396,11 @@ object QuantileQueries {
               new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
             fs.rename(part, new Path(s"$srcDir/half_$i.parquet"))
           }
-        val q = graft.streaming.StreamingKll.start(spark, srcDir, statePath,
-          s"$base/ckpt", valueCol = "value",
-          trigger = Some(Trigger.AvailableNow()))
-        try q.awaitTermination()
-        finally { if (q.isActive) q.stop() }
+        StreamIngest.drain(t => StreamIngest.start(
+            StreamIngest.files(spark, EventStreams.eventSchema, srcDir),
+            s"$base/ckpt", "stream_kll", t) { b =>
+          Seq("applied" -> kllIngest(spark, statePath, b.rows, "value", b.key))
+        })
         kllBandReport(values(spark, dir), "value",
             kllFromState(spark, statePath))
           .localCheckpoint(true) // materialize before the state dir dies

@@ -285,13 +285,13 @@ object Skew {
   def q201SkewIngestSql: String = q195SkewReportSql
 
   /** q202: the q201 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingSkew]] — foreachBatch per landed
+    * ([[graft.streaming.StreamIngest]] — foreachBatch per landed
     * parity file, Trigger.AvailableNow). Oracle IS q195's — the skew
     * monitor's batch/incremental/streamed triple closes. */
   def q202StreamSkew(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.{EventStreams, StreamIngest}
     import graft.sinks.LedgeredState
     val base = java.nio.file.Files.createTempDirectory("graft_q202_")
     val conf = spark.sparkContext.hadoopConfiguration
@@ -308,11 +308,11 @@ object Skew {
           val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
           fs.rename(part, new Path(s"$srcDir/half_$i.parquet"))
         }
-      val q = graft.streaming.StreamingSkew.start(spark, srcDir, statePath,
-        s"$base/ckpt", keyCol = "user_id",
-        trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamIngest.drain(t => StreamIngest.start(
+          StreamIngest.files(spark, EventStreams.eventSchema, srcDir),
+          s"$base/ckpt", "stream_skew", t) { b =>
+        Seq("applied" -> skewIngest(spark, statePath, b.rows, "user_id", b.key))
+      })
       skewReportFromCounts(
           LedgeredState.readPart(spark, statePath, "key_counts").get,
           SkewTopN, SkewTarget)

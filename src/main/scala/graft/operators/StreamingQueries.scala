@@ -368,9 +368,8 @@ object StreamingQueries {
     * rather than assuming the invariant. */
   def q46StreamMerge(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.sinks.MergeSink
-    import graft.streaming.StreamingMerge
+    import graft.streaming.{StreamIngest, StreamingMerge}
     val basePath = java.nio.file.Files.createTempDirectory("graft_q46_")
     val base = basePath.toString
     try {
@@ -388,11 +387,9 @@ object StreamingQueries {
       val src = EventStreams.readEventFixtureStream(spark, dir)
         .select(col("event_id"), col("user_id"),
           lit(null).cast("string").as("event_type"), col("value"))
-      val q = StreamingMerge.start(src, target, s"$base/ckpt", key, fields,
-        trigger = Some(Trigger.AvailableNow()),
-        onStats = (id, s) => { perBatch.put(id, s); () })
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamIngest.drain(t => StreamingMerge.start(src, target, s"$base/ckpt",
+        key, fields, trigger = t,
+        onStats = (id, s) => { perBatch.put(id, s); () }))
       import scala.jdk.CollectionConverters._
       val st = perBatch.values.asScala.foldLeft(MergeSink.MergeStats(0L, 0L, 0L)) {
         (t, s) => MergeSink.MergeStats(t.nMatched + s.nMatched,
@@ -435,9 +432,8 @@ object StreamingQueries {
   def q157StreamEvolution(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types._
-    import graft.streaming.StreamingMerge
+    import graft.streaming.{StreamIngest, StreamingMerge}
     val base = java.nio.file.Files.createTempDirectory("graft_q157_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -459,13 +455,10 @@ object StreamingQueries {
         StructField("lang", StringType), StructField("n_chars", LongType)))
       val schema2 = schema1.add(StructField("flag", LongType))
       def drain(arrivals: String, schema: StructType, ckpt: String,
-                fields: Seq[String]): Unit = {
-        val src = spark.readStream.schema(schema).parquet(arrivals)
-        val q = StreamingMerge.start(src, target, ckpt, "doc_id", fields,
-          trigger = Some(Trigger.AvailableNow()))
-        try q.awaitTermination()
-        finally { if (q.isActive) q.stop() }
-      }
+                fields: Seq[String]): Unit =
+        StreamIngest.drain(t => StreamingMerge.start(
+          StreamIngest.files(spark, schema, arrivals), target, ckpt,
+          "doc_id", fields, trigger = t))
       drain(s"$base/arrivals1", schema1, s"$base/ckpt1", Seq("lang", "n_chars"))
       drain(s"$base/arrivals2", schema2, s"$base/ckpt2",
         Seq("lang", "n_chars", "flag"))
@@ -495,11 +488,10 @@ object StreamingQueries {
 
   /** q72: STREAMING near-dup ingest — q68's nightly pipeline run as a
     * Structured Streaming job. The corpus arrives as a parquet FILE
-    * stream (`maxFilesPerTrigger=1`, so each staged arrival file is its
-    * own micro-batch) and every micro-batch runs
-    * [[MergeQueries.neardupIngest]] through `foreachBatch` against the
-    * persistent signature index — the same batch-only-sink bridge as
-    * [[graft.streaming.StreamingMerge]] (q46). The second arrival file
+    * stream (one file per micro-batch) and every micro-batch runs
+    * [[MergeQueries.neardupIngestManifested]] against the persistent
+    * signature index — through [[graft.streaming.StreamIngest]], the
+    * same batch-only-sink bridge q46 merges through. The second arrival file
     * RE-DELIVERS every 5th document (at-least-once upstream), and
     * foreachBatch replays would re-deliver whole batches: both are
     * absorbed by the ingest's anti-join, so the gate certifies the
@@ -516,8 +508,7 @@ object StreamingQueries {
     * collision neighborhood regardless of corpus size. */
   def q72StreamNeardup(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.StreamingNeardup
+    import graft.streaming.{StreamIngest, StreamingNeardup}
     val base = java.nio.file.Files.createTempDirectory("graft_q72_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(base.toString).getFileSystem(conf)
@@ -541,10 +532,8 @@ object StreamingQueries {
             new org.apache.hadoop.fs.Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
           fs.rename(part, new org.apache.hadoop.fs.Path(s"$srcDir/day_$i.parquet"))
         }
-      val q = StreamingNeardup.start(spark, srcDir, target, s"$base/ckpt",
-        trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamIngest.drain(t => StreamingNeardup.start(spark, srcDir, target,
+        s"$base/ckpt", trigger = t))
       graft.sinks.ManifestMergeSink.readManifested(spark, target)
         .select(col("doc_id"), col("survivor_id"))
         .orderBy(col("doc_id"))
@@ -559,7 +548,8 @@ object StreamingQueries {
   val q72StreamNeardupSql: String = MergeQueries.q68IncrNeardupSql
 
   /** q233: the SCOPE-SHARDED stream — q72's harness against
-    * [[graft.streaming.StreamingNeardup.startScoped]] (arrivals carry
+    * [[MergeQueries.neardupIngestScopedManifested]] through
+    * [[graft.streaming.StreamIngest]] (arrivals carry
     * `lang`, probes join on (lang, chunk, cval)); the final index must
     * equal WITHIN-SCOPE batch clustering of the whole corpus, q229's
     * oracle verbatim. The continuous face of the 100 TB ingest shape:
@@ -567,8 +557,8 @@ object StreamingQueries {
     * it touches, not the corpus. */
   def q233StreamScopedNeardup(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
-    import org.apache.spark.sql.streaming.Trigger
-    import graft.streaming.StreamingNeardup
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    import graft.streaming.{StreamIngest, StreamingNeardup}
     val base = java.nio.file.Files.createTempDirectory("graft_q233_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(base.toString).getFileSystem(conf)
@@ -589,11 +579,15 @@ object StreamingQueries {
             new org.apache.hadoop.fs.Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
           fs.rename(part, new org.apache.hadoop.fs.Path(s"$srcDir/day_$i.parquet"))
         }
-      val q = StreamingNeardup.startScoped(spark, srcDir, target,
-        s"$base/ckpt", scopeCol = "lang",
-        trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      val schema = StructType(StreamingNeardup.docSchema.fields :+
+        StructField("lang", StringType))
+      StreamIngest.drain(t => StreamIngest.start(
+          StreamIngest.files(spark, schema, srcDir),
+          s"$base/ckpt", "stream_neardup_scoped", t) { b =>
+        val s = MergeQueries.neardupIngestScopedManifested(spark, target,
+          b.rows, "doc_id", "text", "lang", 16)
+        Seq("n_matched" -> s.nMatched, "n_upserted" -> s.nUpserted)
+      })
       graft.sinks.ManifestMergeSink.readManifested(spark, target)
         .select(col("doc_id"), col("lang"), col("survivor_id"))
         .orderBy(col("doc_id"))

@@ -297,14 +297,14 @@ object TextQueries {
   def q188NoveltyIngestSql: String = q187NoveltySql
 
   /** q191: the q188 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingNovelty]] — foreachBatch per landed
+    * ([[graft.streaming.StreamIngest]] — foreachBatch per landed
     * day file, Trigger.AvailableNow; disjoint day files, the
     * additive-state input contract) — q163's harness for the novelty
     * index. Oracle IS q187's. */
   def q191StreamNovelty(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.StreamIngest
     import graft.sinks.LedgeredState
     val base = java.nio.file.Files.createTempDirectory("graft_q191_")
     val conf = spark.sparkContext.hadoopConfiguration
@@ -321,10 +321,11 @@ object TextQueries {
           val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
           fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
         }
-      val q = graft.streaming.StreamingNovelty.start(spark, srcDir,
-        statePath, s"$base/ckpt", trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamIngest.drain(t => StreamIngest.start(
+          StreamIngest.files(spark, StreamIngest.docSchema, srcDir),
+          s"$base/ckpt", "stream_novelty", t) { b =>
+        Seq("applied" -> noveltyIngest(spark, statePath, b.rows, b.key))
+      })
       noveltyFromState(
         LedgeredState.readPart(spark, statePath, "gram_df").get,
         LedgeredState.readPart(spark, statePath, "doc_grams").get, docs)
@@ -461,7 +462,7 @@ object TextQueries {
        |WHERE c >= ${ContainT} ORDER BY inner_id, outer_id""".stripMargin
 
   /** q193: the q192 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingContainment]] — foreachBatch per
+    * ([[graft.streaming.StreamIngest]] — foreachBatch per
     * landed day file, Trigger.AvailableNow; disjoint day files, and the
     * replay protection is the LEDGER+pairs atomic commit, exercised by
     * the incremental gate). Oracle IS q183's — the containment family's
@@ -469,7 +470,7 @@ object TextQueries {
   def q193StreamContainment(spark: SparkSession, dir: String): DataFrame =
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.{StreamIngest, StreamingContainment}
     import graft.sinks.LedgeredState
     val base = java.nio.file.Files.createTempDirectory("graft_q193_")
     val conf = spark.sparkContext.hadoopConfiguration
@@ -486,11 +487,9 @@ object TextQueries {
           val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
           fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
         }
-      val q = graft.streaming.StreamingContainment.start(spark, srcDir,
+      StreamIngest.drain(t => StreamingContainment.start(spark, srcDir,
         statePath, s"$base/ckpt", n = ContainN, threshold = ContainT,
-        blockCol = Some("source"), trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+        blockCol = Some("source"), trigger = t))
       LedgeredState.readPart(spark, statePath, "pairs").get
         .orderBy(col("inner_id"), col("outer_id"))
         .localCheckpoint(true) // materialize before the state dir dies
@@ -1876,7 +1875,7 @@ object TextQueries {
   def q110VocabIngestSql: String = q109VocabOovSql
 
   /** q112: the vocabulary ledger driven by a REAL file stream
-    * ([[graft.streaming.StreamingVocab]], one micro-batch per landed
+    * ([[graft.streaming.StreamIngest]], one micro-batch per landed
     * day file, Trigger.AvailableNow) — q110's state fold behind
     * Structured Streaming's delivery, exactly as q87 is to q85. The
     * harness lands two disjoint day files; the final snapshot-derived
@@ -1884,7 +1883,7 @@ object TextQueries {
     * oracle, verbatim. */
   def q112StreamVocab(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
-    import org.apache.spark.sql.streaming.Trigger
+    import graft.streaming.StreamIngest
     val base = java.nio.file.Files.createTempDirectory("graft_q112_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(base.toString).getFileSystem(conf)
@@ -1902,10 +1901,12 @@ object TextQueries {
             new org.apache.hadoop.fs.Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
           fs.rename(part, new org.apache.hadoop.fs.Path(s"$srcDir/day_$i.parquet"))
         }
-      val q = graft.streaming.StreamingVocab.start(spark, srcDir, statePath,
-        s"$base/ckpt", trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamIngest.drain(t => StreamIngest.start(
+          StreamIngest.files(spark, StreamIngest.docSchema, srcDir),
+          s"$base/ckpt", "stream_vocab", t) { b =>
+        Seq("applied" -> vocabIngest(spark, statePath, b.rows, b.key, "lang",
+          "text"))
+      })
       coverageFromTypeCounts(graft.sinks.LedgeredState.readPart(spark, statePath, "counts").get, VocabSize)
         .localCheckpoint(true) // materialize before the state dir is deleted
     } finally {

@@ -2092,7 +2092,7 @@ object TrainingData {
   def q132SampleIngestSql: String = q128WeightedSampleSql
 
   /** q142: the q132 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingSample]] — foreachBatch per landed day
+    * ([[graft.streaming.StreamIngest]] — foreachBatch per landed day
     * file, Trigger.AvailableNow), with day 2's file RE-DELIVERING a
     * slice of day 1 and the files landed in REVERSED day order — both
     * legal because the top-k state is replay-absorbing and order-free
@@ -2101,7 +2101,8 @@ object TrainingData {
   def q142StreamSample(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import graft.streaming.StreamIngest
     val base = java.nio.file.Files.createTempDirectory("graft_q142_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -2121,10 +2122,15 @@ object TrainingData {
         val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
         fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
       }
-      val q = graft.streaming.StreamingSample.start(spark, srcDir, statePath,
-        s"$base/ckpt", WsK, WsSeed, trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamIngest.drain(t => StreamIngest.start(
+          StreamIngest.files(spark, StructType(Seq(StructField("doc_id", LongType),
+            StructField("lang", StringType), StructField("n_chars", LongType))),
+            srcDir),
+          s"$base/ckpt", "stream_sample", t) { b =>
+        sampleIngest(spark, statePath, b.rows, "doc_id", "n_chars", Seq("lang"),
+          WsK, WsSeed)
+        Nil
+      })
       readSampleState(spark, statePath)
         .withColumn("rank",
           row_number().over(Window.orderBy(col("qk").asc, col("doc_id"))))
@@ -2268,7 +2274,7 @@ object TrainingData {
   }
 
   /** q151: the q141 fold behind a REAL file stream
-    * ([[graft.streaming.StreamingSkyline]] — foreachBatch per landed
+    * ([[graft.streaming.StreamIngest]] — foreachBatch per landed
     * day file, Trigger.AvailableNow), files landed in REVERSED day
     * order with a re-delivered slice — legal under the monotone-
     * mergeable contract (the q142 harness applied to the frontier).
@@ -2276,7 +2282,8 @@ object TrainingData {
   def q151StreamSkyline(spark: SparkSession, dir: String): DataFrame = 
     graft.streaming.StreamConf.withShuffle(spark) {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.sql.streaming.Trigger
+    import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+    import graft.streaming.StreamIngest
     val base = java.nio.file.Files.createTempDirectory("graft_q151_")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(base.toString).getFileSystem(conf)
@@ -2296,10 +2303,15 @@ object TrainingData {
         val part = fs.globStatus(new Path(s"$base/stage_$i/part-*.parquet"))(0).getPath
         fs.rename(part, new Path(s"$srcDir/day_$i.parquet"))
       }
-      val q = graft.streaming.StreamingSkyline.start(spark, srcDir, statePath,
-        s"$base/ckpt", trigger = Some(Trigger.AvailableNow()))
-      try q.awaitTermination()
-      finally { if (q.isActive) q.stop() }
+      StreamIngest.drain(t => StreamIngest.start(
+          StreamIngest.files(spark, StructType(Seq(StructField("doc_id", LongType),
+            StructField("lang", StringType), StructField("quality", DoubleType),
+            StructField("n_tokens", LongType))), srcDir),
+          s"$base/ckpt", "stream_skyline", t) { b =>
+        skylineIngest(spark, statePath, b.rows, "doc_id", "quality", "n_tokens",
+          Seq("lang"))
+        Nil
+      })
       readSkylineState(spark, statePath)
         .select(col("doc_id"), col("lang"), col("quality"), col("n_tokens"))
         .orderBy(col("lang"), col("quality").desc, col("n_tokens").desc,

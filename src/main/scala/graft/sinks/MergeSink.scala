@@ -417,7 +417,8 @@ object MergeSink {
     *
     * Purging keys that are absent is a content-level no-op (the touched
     * buckets are rewritten with identical rows — idempotent, so a purge
-    * REPLAY is always safe). Both row counts ride the single write
+    * REPLAY is always safe, with no ledger; purge sets compose by union,
+    * so request order is immaterial too). Both row counts ride the single write
     * action as [[Observation]]s, the mergePlanObserved discipline. */
   def purgePartitioned(spark: SparkSession, targetPath: String,
                        keys: DataFrame, key: String,

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -112,25 +112,19 @@ object StreamingCdcApply {
     toSeq
   }
 
+  /** The notification stream: [[StreamIngest]] over the source's
+    * `_commits` directory, one [[applyOnce]] per landed commit file (the
+    * batch content is only the wake-up; the apply reads its span from
+    * the logs directly). */
   def start(spark: SparkSession, srcTable: String, replicaTable: String,
             checkpointDir: String, key: String, fields: Seq[String],
             nBuckets: Int, pipelineId: String,
-            maxFilesPerTrigger: Int = 1,
-            trigger: Option[Trigger] = None): StreamingQuery = {
-    val writer = spark.readStream
-      .schema(StructType(Seq(StructField("value", StringType))))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .text(s"$srcTable/_commits")
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (_: Dataset[Row], batchId: Long) =>
-        // the batch content is just the notification; the apply reads
-        // its span from the logs directly
-        val wm = applyOnce(spark, srcTable, replicaTable, key, fields,
-          nBuckets, pipelineId)
-        println(s"""{"stage":"stream_cdc_apply","batch":$batchId,""" +
-          s""""watermark":$wm}""")
-      }
-    trigger.fold(writer)(writer.trigger).start()
-  }
+            trigger: Option[Trigger] = None): StreamingQuery =
+    StreamIngest.start(StreamIngest.files(spark,
+        StructType(Seq(StructField("value", StringType))),
+        s"$srcTable/_commits", format = "text"),
+        checkpointDir, "stream_cdc_apply", trigger) { _ =>
+      Seq("watermark" -> applyOnce(spark, srcTable, replicaTable, key,
+        fields, nBuckets, pipelineId))
+    }
 }

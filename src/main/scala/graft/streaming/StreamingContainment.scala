@@ -1,49 +1,23 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.operators.Dedup
 
-/** The containment index as a CONTINUOUS ingest: stream document files
-  * out of a landing directory and fold each micro-batch into the
-  * persistent posting/size/pair state ([[Dedup.containmentIngest]]) —
-  * the streaming face of the q192 day-batch pipeline, wired like
-  * [[StreamingHist]] (state + batchId ledger behind foreachBatch).
-  *
-  * Delivery semantics: whole-batch replays are ledger no-ops — and
-  * here that protection carries the OUTPUT too, because the pair
-  * relation is itself a state part committed atomically with the
-  * ledger (a replayed batch can neither re-probe nor re-emit). Row
-  * duplicates across files are the upstream's to prevent: a re-said
-  * doc_id would double its postings.
-  *
-  * Scale: zero streaming state — per batch, the exact prefix-filter
-  * join WITHIN the batch plus one counting join of the posting index
-  * against the batch's grams (candidates + verification in one
-  * aggregate, both directions); see [[Dedup.containmentIngest]] for
-  * the posting-layout and governor notes. */
+/** The containment index as a CONTINUOUS ingest: [[StreamIngest]] over
+  * landed document files, folding each micro-batch into the persistent
+  * posting/size/pair state ([[Dedup.containmentIngest]]) — the streaming
+  * face of the q192 day-batch pipeline, under [[StreamIngest]]'s
+  * delivery contract. */
 object StreamingContainment {
-
-  val docSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType),
-    StructField("lang", StringType), StructField("source", StringType),
-    StructField("n_chars", LongType)))
 
   def start(spark: SparkSession, srcDir: String, statePath: String,
             checkpointDir: String, n: Int, threshold: Double,
             blockCol: Option[String],
-            maxFilesPerTrigger: Int = 1,
-            trigger: Option[Trigger] = None): StreamingQuery = {
-    val writer = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val applied = Dedup.containmentIngest(spark, statePath, batch,
-          "doc_id", "text", n, threshold, blockCol, s"batch_$batchId")
-        println(s"""{"stage":"stream_containment","batch":$batchId,"applied":$applied}""")
-      }
-    trigger.fold(writer)(writer.trigger).start()
-  }
+            trigger: Option[Trigger] = None): StreamingQuery =
+    StreamIngest.start(StreamIngest.files(spark, StreamIngest.docSchema, srcDir),
+        checkpointDir, "stream_containment", trigger) { b =>
+      Seq("applied" -> Dedup.containmentIngest(spark, statePath, b.rows,
+        "doc_id", "text", n, threshold, blockCol, b.key))
+    }
 }

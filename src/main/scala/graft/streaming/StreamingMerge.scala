@@ -1,21 +1,21 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.sinks.MergeSink
 
 /** The reference pipeline as a STREAM: continuously merge arriving update
   * batches into the keyed parquet snapshot. Each micro-batch runs the
-  * same single-pass [[MergeSink.mergeInto]] the batch CLI uses —
-  * `foreachBatch` is Structured Streaming's bridge to batch-only sinks.
+  * same single-pass [[MergeSink.mergeInto]] the batch CLI uses, through
+  * [[StreamIngest]].
   *
-  * Delivery semantics: at-least-once per micro-batch (a replayed batch
-  * re-merges), which is SAFE here because the merge is idempotent on
-  * data — re-applying an update set leaves the snapshot unchanged
-  * (MergeSinkSpec "merge idempotence"); only the observed counts and
-  * `updatedAt` stamps reflect the replay. That mirrors the reference's
-  * unordered retry-free writes (mongo.py:107,139) where re-running a
-  * batch re-upserts the same documents. */
+  * Delivery: a replayed batch re-merges, which is SAFE here because the
+  * merge is idempotent on data — re-applying an update set leaves the
+  * snapshot unchanged (MergeSinkSpec "merge idempotence"); only the
+  * observed counts and `updatedAt` stamps reflect the replay. That
+  * mirrors the reference's unordered retry-free writes
+  * (mongo.py:107,139) where re-running a batch re-upserts the same
+  * documents. */
 object StreamingMerge {
 
   /** Start the merge stream. `onStats` receives each micro-batch's id and
@@ -32,15 +32,12 @@ object StreamingMerge {
             key: String, fields: Seq[String],
             orderCol: Option[String] = None,
             trigger: Option[Trigger] = None,
-            onStats: (Long, MergeSink.MergeStats) => Unit = (_, _) => ()): StreamingQuery = {
-    val spark = updates.sparkSession
-    val writer = updates.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val stats = MergeSink.mergeInto(spark, targetPath, batch, key, fields, orderCol)
-        println(s"""{"stage":"stream_merge","batch":$batchId,"n_matched":${stats.nMatched},"n_modified":${stats.nModified},"n_upserted":${stats.nUpserted}}""")
-        onStats(batchId, stats)
-      }
-    trigger.fold(writer)(writer.trigger).start()
-  }
+            onStats: (Long, MergeSink.MergeStats) => Unit = (_, _) => ()): StreamingQuery =
+    StreamIngest.start(updates, checkpointDir, "stream_merge", trigger) { b =>
+      val stats = MergeSink.mergeInto(updates.sparkSession, targetPath,
+        b.rows, key, fields, orderCol)
+      onStats(b.id, stats)
+      Seq("n_matched" -> stats.nMatched, "n_modified" -> stats.nModified,
+        "n_upserted" -> stats.nUpserted)
+    }
 }

@@ -1,30 +1,21 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.operators.MergeQueries
 import graft.sinks.MergeSink
 
-/** Near-dup dedup as a CONTINUOUS ingest: stream document files out of a
-  * landing directory and run [[MergeQueries.neardupIngestManifested]] on each
-  * micro-batch — the streaming face of the persistent-signature-index
-  * pipeline (q68), wired exactly like [[StreamingMerge]] (foreachBatch is
-  * Structured Streaming's bridge to batch-only sinks).
+/** Near-dup dedup as a CONTINUOUS ingest: [[StreamIngest]] over landed
+  * document files, running [[MergeQueries.neardupIngestManifested]] on
+  * each micro-batch — the streaming face of the persistent-signature-index
+  * pipeline (q68).
   *
-  * Delivery semantics: at-least-once, twice over — the upstream may land
-  * duplicate documents across files, and foreachBatch may replay a whole
-  * batch after a failure. Both are absorbed by the ingest's index
-  * anti-join (already-indexed doc_ids drop before signatures are even
-  * computed), and the survivor invariant holds under ANY batch order
-  * (MergePropsSpec), which is what makes the operator safe behind a
-  * source that guarantees delivery but not sequence.
-  *
-  * Scale: foreachBatch holds zero rows between batches — streaming adds
-  * NO state of its own; memory is one micro-batch's collision
-  * neighborhood, and the corpus-sized state lives in the index snapshot
-  * (q68's argument). `maxFilesPerTrigger` is the knob that bounds a
-  * micro-batch when the upstream lands many files at once. */
+  * Delivery: stronger than [[StreamIngest]]'s contract — the ingest's
+  * index anti-join drops already-indexed doc_ids before signatures are
+  * computed, so batch replays AND upstream duplicates across files are
+  * absorbed, and the survivor invariant holds under ANY batch order
+  * (MergePropsSpec). */
 object StreamingNeardup {
 
   val docSchema: StructType = StructType(Seq(
@@ -40,50 +31,14 @@ object StreamingNeardup {
     * accumulating — replays re-deliver the same id, see
     * [[StreamingMerge.start]]). */
   def start(spark: SparkSession, srcDir: String, target: String,
-            checkpointDir: String, maxFilesPerTrigger: Int = 1,
+            checkpointDir: String,
             trigger: Option[Trigger] = None, nBuckets: Int = 16,
-            onStats: (Long, MergeSink.MergeStats) => Unit = (_, _) => ()): StreamingQuery = {
-    val writer = spark.readStream.schema(docSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val s = MergeQueries.neardupIngestManifested(spark, target, batch,
-          "doc_id", "text", nBuckets)
-        println(s"""{"stage":"stream_neardup","batch":$batchId,"n_matched":${s.nMatched},"n_upserted":${s.nUpserted}}""")
-        onStats(batchId, s)
-      }
-    trigger.fold(writer)(writer.trigger).start()
-  }
-
-  /** The SCOPE-SHARDED stream ([[MergeQueries
-    * .neardupIngestScopedManifested]] per micro-batch): arrivals carry
-    * a scope column (lang/source/crawl), the index stores it, and
-    * every probe joins on (scope, chunk, cval) — the continuous face
-    * of q229, with the same delivery semantics as [[start]]. This is
-    * the 100 TB streaming shape: a micro-batch's collision
-    * neighborhood is bounded by the SCOPES it touches, not the corpus
-    * (SCALE.md round-17 curve). `maxBucketSize` optionally stacks the
-    * q230-certified hot-bucket governor. */
-  def startScoped(spark: SparkSession, srcDir: String, target: String,
-                  checkpointDir: String, scopeCol: String = "lang",
-                  maxFilesPerTrigger: Int = 1,
-                  trigger: Option[Trigger] = None, nBuckets: Int = 16,
-                  maxBucketSize: Option[Int] = None,
-                  onStats: (Long, MergeSink.MergeStats) => Unit = (_, _) => ()): StreamingQuery = {
-    val schema = StructType(docSchema.fields :+
-      StructField(scopeCol, StringType))
-    val writer = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val s = MergeQueries.neardupIngestScopedManifested(spark, target,
-          batch, "doc_id", "text", scopeCol, nBuckets,
-          maxBucketSize = maxBucketSize)
-        println(s"""{"stage":"stream_neardup_scoped","batch":$batchId,"n_matched":${s.nMatched},"n_upserted":${s.nUpserted}}""")
-        onStats(batchId, s)
-      }
-    trigger.fold(writer)(writer.trigger).start()
-  }
+            onStats: (Long, MergeSink.MergeStats) => Unit = (_, _) => ()): StreamingQuery =
+    StreamIngest.start(StreamIngest.files(spark, docSchema, srcDir),
+        checkpointDir, "stream_neardup", trigger) { b =>
+      val s = MergeQueries.neardupIngestManifested(spark, target, b.rows,
+        "doc_id", "text", nBuckets)
+      onStats(b.id, s)
+      Seq("n_matched" -> s.nMatched, "n_upserted" -> s.nUpserted)
+    }
 }
